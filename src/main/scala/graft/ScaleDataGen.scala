@@ -32,13 +32,16 @@ import org.apache.spark.sql.functions._
   * NOT an oracle corpus — scaling evidence only; correctness stays
   * gated on the driver's own SFs.
   *
-  * Run: sbt "runMain graft.ScaleDataGen <srcDir> <outDir> <k>"
+  * Run: sbt "runMain graft.ScaleDataGen <srcDir> <outDir> <k>"  (1 <= k <= 26)
   */
 object ScaleDataGen {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/root/scaledata/sf1")
     val k = args.lift(2).map(_.toInt).getOrElse(10)
+    // the per-copy alphabet rotation has period 26: copy 26 would
+    // repeat copy 0's text verbatim
+    require(k >= 1 && k <= 26, s"k must be in [1, 26], got $k")
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
       .config("spark.sql.shuffle.partitions",

@@ -1,7 +1,7 @@
 package graft.log
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *    insert callback returning the stored doc)
   *  - ack upsert (`topic.js:198-223`)      -> [[ack]] subscriber watermark
   *  - replay from last ack                 -> [[replay]] offset-predicate
-  *    (`topic.js:142-197` replayFrom)         scan, pushed to parquet
+  *    (`topic.js:142-197` replayFrom)         scan
   *  - latest() head (`topic.js:224-250`)   -> [[latest]] / [[heads]]
   *  - capped-size retention (`topic.js:8`) -> [[retainToSize]] oldest-file
   *    drop; plus [[retainAfter]] (time) and [[retainFrom]] (offset)
@@ -32,8 +32,9 @@ import org.apache.spark.sql.functions._
   * oldest RETAINED offset with no error — the records between the
   * watermark and the retention horizon are a silent data-loss window,
   * exactly the reference's capped-collection overwrite semantics
-  * (`topic.js:8-10`). Monitor [[q22-style consumer lag]] against the
-  * retention horizon to catch subscribers drifting toward the edge.
+  * (`topic.js:8-10`). Monitor consumer lag ([[heads]] minus
+  * [[watermarks]]) against the retention horizon to catch subscribers
+  * drifting toward the edge.
   *
   * Scale design:
   *  - Offsets need no global coordination — each log_part numbers
@@ -66,9 +67,12 @@ import org.apache.spark.sql.functions._
   *    take the SAME lease, so a maintenance swap can never race a
   *    concurrent publish (which would silently drop the appended
   *    batch); the lease renews itself for the duration of long jobs.
-  *  - Replay is `offset > watermark` + event filter, both pushed into
-  *    the parquet scan, so a subscriber reading the tail of a 100 TB
-  *    topic scans only the tail row groups.
+  *  - Every place a driver-side per-partition offset map meets log
+  *    rows (publish's base offsets, batch [[replay]], live subscribe)
+  *    goes through one array literal indexed by `log_part`: a plain
+  *    projection, no join and no extra Spark job, identical in batch
+  *    and streaming plans. The event filter is pushed into the parquet
+  *    scan; the `offset > watermark` cut is evaluated per row.
   */
 final class TopicLog(val spark: SparkSession, val path: String, val numPartitions: Int = 8) {
 
@@ -326,13 +330,6 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
   private def publishLocked(records: DataFrame,
       held: FsLease.Held): Map[Int, TopicLog.OffsetRange] = {
     val base = headsPersist()
-    val baseDf = spark.createDataFrame(
-      java.util.Arrays.asList(
-        (0 until numPartitions).map(p =>
-          org.apache.spark.sql.Row(p, base.getOrElse(p, -1L))): _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("log_part", org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("base_offset", org.apache.spark.sql.types.LongType))))
     val w = Window.partitionBy(col("log_part"))
       .orderBy(col("ts"), col("event"), col("key"), col("message"))
     val obs = Observation()
@@ -341,9 +338,7 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     records
       .withColumn("log_part",
         pmod(hash(coalesce(col("key"), col("message"))), lit(numPartitions)).cast("int"))
-      .withColumn("seq", row_number().over(w).cast("long"))
-      .join(broadcast(baseDf), Seq("log_part"))
-      .withColumn("offset", col("base_offset") + col("seq"))
+      .withColumn("offset", byPartition(base) + row_number().over(w))
       .withColumn("log_date", to_date(col("ts")))
       .select(col("offset"), col("ts"), col("event"), col("key"),
         col("message"), col("log_part"), col("log_date"))
@@ -423,10 +418,11 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
   private def subFile(name: String): Path = new Path(subsDir,
     java.net.URLEncoder.encode(name, "UTF-8") + ".json")
 
-  /** Durable subscriber watermarks (name, log_part, last_offset): one
-    * tiny `subscribers/<name>.json` sidecar per subscriber, parsed
-    * driver-side (subscriber counts are human-scale; the frame is only
-    * ever broadcast). */
+  /** Every durable subscriber's watermarks (name, log_part,
+    * last_offset): one tiny `subscribers/<name>.json` sidecar per
+    * subscriber, listed and parsed driver-side (subscriber counts are
+    * human-scale). An inspection view — replay reads only its own
+    * subscriber's sidecar, via [[watermarks]]. */
   def subscribers(): DataFrame = {
     val d = new Path(subsDir)
     val rows: Seq[org.apache.spark.sql.Row] =
@@ -449,27 +445,44 @@ final class TopicLog(val spark: SparkSession, val path: String, val numPartition
     * tmp+rename of the subscriber's own sidecar, no Spark job (this
     * sits on the per-micro-batch ack hot path), and different
     * subscribers never touch each other's files, so concurrent acks
-    * across subscribers cannot lose updates. */
+    * across subscribers cannot lose updates. Partition keys must lie in
+    * `[0, numPartitions)`. */
   def ack(name: String, watermarks: Map[Int, Long]): Unit = {
-    val f = subFile(name)
-    val merged = readKv(f).getOrElse(Map.empty) ++ watermarks
-    writeKv(f, merged)
+    val bad = watermarks.keys.filter(p => p < 0 || p >= numPartitions).toSeq.sorted
+    require(bad.isEmpty, s"ack for '$name' names partitions ${bad.mkString(", ")} " +
+      s"outside [0, $numPartitions) — no replay could apply them")
+    writeKv(subFile(name), this.watermarks(name) ++ watermarks)
   }
+
+  /** A durable subscriber's acked watermarks (log_part -> last acked
+    * offset; empty for a new subscriber): one read of its own sidecar,
+    * no directory listing and no Spark job. */
+  def watermarks(name: String): Map[Int, Long] =
+    readKv(subFile(name)).getOrElse(Map.empty)
 
   /** Replay for a durable subscriber (reference `replay`/`replayFrom`,
     * topic.js:118-197): records strictly after the acked watermark of
     * `name`, optionally filtered to one event type (null = all, matching
     * topic.js:169-171). New subscribers replay from the beginning. */
-  def replay(name: String, event: Option[String] = None): DataFrame = {
-    val marks = subscribers().filter(col("name") === name)
-      .select(col("log_part"), col("last_offset"))
-    val base = read()
-      .join(broadcast(marks), Seq("log_part"), "left")
-      .filter(col("last_offset").isNull || col("offset") > col("last_offset"))
-      .drop("last_offset")
-    event.fold(base)(e => base.filter(col("event") === e))
-      .orderBy(col("log_part"), col("offset"))
+  def replay(name: String, event: Option[String] = None): DataFrame =
+    after(read(), watermarks(name), event).orderBy(col("log_part"), col("offset"))
+
+  /** The one replay cut, shared by batch [[replay]] and the live
+    * subscriptions in [[graft.streaming.TopicStream]]: rows of `log` (a
+    * batch or streaming read of this topic) strictly after `marks`,
+    * optionally of one event type. A partition absent from `marks` is
+    * read from its first offset. */
+  private[graft] def after(log: DataFrame, marks: Map[Int, Long],
+      event: Option[String]): DataFrame = {
+    val cut = log.filter(col("offset") > byPartition(marks))
+    event.fold(cut)(e => cut.filter(col("event") === e))
   }
+
+  /** A driver-side `log_part -> offset` map as a column over log rows:
+    * an array literal indexed by `log_part`, −1 for a partition the map
+    * lacks (safe: a partition's first offset is 0). */
+  private def byPartition(m: Map[Int, Long]): Column =
+    typedLit((0 until numPartitions).map(p => m.getOrElse(p, -1L))).apply(col("log_part"))
 
   /** Time-based replay: records with ts >= since, oldest first. The
     * `log_date` predicate PARTITION-PRUNES the `log_date=D` directory

@@ -156,6 +156,28 @@ class TopicLogSpec extends AnyFunSuite {
       heads.map { case (p, h) => h - h / 2 }.sum)
   }
 
+  test("watermarks: empty for a new subscriber, the merged acks after") {
+    val dir = Files.createTempDirectory("topic").toString
+    val topic = TopicLog.prepare(spark, dir, numPartitions = 4)
+    assert(topic.watermarks("w") == Map.empty)
+    topic.ack("w", Map(0 -> 3L, 2 -> 7L))
+    topic.ack("w", Map(2 -> 9L, 3 -> 1L))
+    assert(topic.watermarks("w") == Map(0 -> 3L, 2 -> 9L, 3 -> 1L))
+    assert(topic.watermarks("other") == Map.empty)
+  }
+
+  test("ack rejects partition keys outside [0, numPartitions)") {
+    val dir = Files.createTempDirectory("topic").toString
+    val topic = TopicLog.prepare(spark, dir, numPartitions = 4)
+    topic.ack("s", Map(1 -> 5L))
+    Seq(Map(99 -> 5L), Map(4 -> 5L), Map(-1 -> 5L), Map(0 -> 1L, 4 -> 2L)).foreach { bad =>
+      val e = intercept[IllegalArgumentException](topic.ack("s", bad))
+      assert(e.getMessage.contains("outside [0, 4)"), e.getMessage)
+    }
+    // a rejected ack persists nothing, not even its in-range keys
+    assert(topic.watermarks("s") == Map(1 -> 5L))
+  }
+
   test("compact keeps only the latest record per key") {
     val dir = Files.createTempDirectory("topic").toString
     val topic = TopicLog.prepare(spark, dir, numPartitions = 4)

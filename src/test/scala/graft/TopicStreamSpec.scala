@@ -429,7 +429,7 @@ class TopicStreamSpec extends AnyFunSuite {
     assert(!sub.isActive)
   }
 
-  test("backlog cut is one broadcast watermark join, not a filter chain") {
+  test("backlog cut is one array-indexed filter, not a join or filter chain") {
     import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join}
     val dir = Files.createTempDirectory("stream").toString
     val topic = TopicLog.prepare(spark, dir, numPartitions = 32)
@@ -439,9 +439,15 @@ class TopicStreamSpec extends AnyFunSuite {
     val plan = stream.queryExecution.analyzed
     val joins = plan.collect { case j: Join => j }
     val filters = plan.collect { case f: Filter => f }
-    assert(joins.size == 1, s"expected the broadcast watermark join, got $joins")
+    assert(joins.isEmpty, s"the watermark cut must not join, got $joins")
+    assert(filters.nonEmpty, "the backlog cut is missing")
     assert(filters.size <= 2,
       s"per-partition filter chain is back (${filters.size} Filter nodes)")
+    // batch replay goes through the same cut
+    topic.ack("s", topic.heads())
+    val replayPlan = topic.replay("s").queryExecution.analyzed
+    assert(replayPlan.collect { case j: Join => j }.isEmpty)
+    assert(topic.replay("s").count() == 0)
   }
 
   test("enrichAsof joins each live record to the latest dim state at event time") {
